@@ -83,10 +83,10 @@ object RosterSink {
 
   /**
    * S8 append-with-conservation: append `delta` to the state table at
-   * `path`, then verify the re-read row count grew by exactly delta.count
-   * (template_submitters.Rmd:961-985). Returns the post-append count;
-   * throws on conservation failure (the reference diverts to a holding
-   * folder — callers catch and route).
+   * `path`, then verify the re-read row count grew by exactly the rows
+   * the append wrote (template_submitters.Rmd:961-985). Returns the
+   * post-append count; throws on conservation failure (the reference
+   * diverts to a holding folder — callers catch and route).
    */
   def appendWithCheck(delta: DataFrame, path: String): Long = {
     val spark = delta.sparkSession
@@ -100,9 +100,13 @@ object RosterSink {
         case e: org.apache.spark.sql.AnalysisException
             if e.getCondition == "PATH_NOT_FOUND" => 0L
       }
-    val expected = delta.count()
-    delta.write.mode("append").option("header", "true")
+    // the delta's row count rides the append write (observe()), so its
+    // plan runs once; an absent metric is an AQE-collapsed empty delta
+    val obs = org.apache.spark.sql.Observation()
+    delta.observe(obs, count(lit(1)).as("n"))
+      .write.mode("append").option("header", "true")
       .option("emptyValue", "").option("nullValue", "").csv(path)
+    val expected = obs.get.get("n").fold(0L)(_.asInstanceOf[Long])
     val after = spark.read.option("header", "true").csv(path).count()
     if (after != before + expected)
       throw new IllegalStateException(

@@ -2,8 +2,12 @@ package graft
 
 import graft.operators.Joins
 import graft.sources.SnapshotStore
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Versioned state store: publish/flip/read-back, crash isolation,
   * vacuum; plus the snapshot-diff operator over two published versions. */
@@ -36,6 +40,105 @@ class SnapshotStoreSpec extends SparkSpec {
     val schema = Seq(("x", 1)).toDF("key", "v").schema
     assert(store.readOrEmpty("nothing", schema).count() === 0)
     assert(store.readOrEmpty("nothing", schema).schema === schema)
+  }
+
+  /** Jobs `body` starts on this thread. A marker job run afterwards
+    * drains the listener bus: once its start is seen, so are all earlier
+    * ones. */
+  private def jobsIn(body: => Unit): Int = {
+    val group = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(s"$group-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(s"$group-marker"), "listener bus did not drain")
+      seen.asScala.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("publish runs its input plan once: the row count rides the write") {
+    val root = Files.createTempDirectory("graft_store_once").toString
+    val store = new SnapshotStore(spark, root)
+    val acc = spark.sparkContext.longAccumulator("publish_rows")
+    val seen = udf { (_: Long) => acc.add(1L); true }.asNondeterministic()
+    val v = store.publish("t", spark.range(0, 100, 1, 4).toDF().filter(seen(col("id"))))
+    assert(v === 0L)
+    assert(acc.value === 100L)
+    assert(store.read("t").count() === 100L)
+  }
+
+  test("read/readOrEmpty/readVersion return exactly what inference reads") {
+    val root = Files.createTempDirectory("graft_store_schema").toString
+    val store = new SnapshotStore(spark, root)
+    val schema = StructType(Seq(
+      StructField("s", StringType, nullable = false),
+      StructField("i", IntegerType, nullable = false),
+      StructField("l", LongType),
+      StructField("d", DateType),
+      StructField("dec", DecimalType(12, 3), nullable = false),
+      StructField("arr", ArrayType(StringType, containsNull = false)),
+      StructField("st", StructType(Seq(
+        StructField("a", IntegerType, nullable = false),
+        StructField("b", StringType))), nullable = false)))
+    val rows = Seq(
+      Row("x", 1, 10L, java.sql.Date.valueOf("2021-04-01"),
+        new java.math.BigDecimal("1.250"), Seq("p", "q"), Row(7, "b")),
+      Row("y", 2, null, null, new java.math.BigDecimal("-3.000"), null, Row(8, null)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    store.publish("t", df)
+    store.publish("t", store.read("t").limit(1))
+    for (v <- Seq(0L, 1L)) {
+      val inferred = spark.read.parquet(s"$root/t/v=$v")
+      def same(got: DataFrame): Unit = {
+        assert(got.schema === inferred.schema)
+        assert(rowsOf(got) === rowsOf(inferred))
+      }
+      val fresh = new SnapshotStore(spark, root)
+      for (s <- Seq(store, fresh)) {
+        same(s.readVersion("t", v))
+        if (v == 1L) { same(s.read("t")); same(s.readOrEmpty("t", schema)) }
+      }
+    }
+    // the publishing store reads its own versions without an inference
+    // job; a store that did not publish them still infers
+    assert(jobsIn(store.read("t")) === 0)
+    assert(jobsIn(store.readVersion("t", 0L)) === 0)
+    assert(jobsIn(new SnapshotStore(spark, root).read("t")) > 0)
+  }
+
+  test("publishing an empty frame gives a 0-row version with its schema") {
+    val root = Files.createTempDirectory("graft_store_empty").toString
+    val store = new SnapshotStore(spark, root)
+    val schema = Seq(("k", 1L)).toDF("key", "n").schema
+    // the emptyRDD shape readOrEmpty returns before the first publish
+    store.publish("e", store.readOrEmpty("e", schema))
+    // a filter that removes every row
+    store.publish("f", Seq(("a", 1L), ("b", 2L)).toDF("key", "n")
+      .filter(col("n") > 5L))
+    store.publish("g", spark.range(0, 50, 1, 4).select(
+      col("id").cast("string").as("key"), col("id").as("n"))
+      .filter(col("n") < 0L))
+    for (t <- Seq("e", "f", "g")) {
+      val got = store.read(t)
+      assert(got.count() === 0L, t)
+      assert(got.schema === spark.read.parquet(s"$root/$t/v=0").schema, t)
+      assert(got.schema.map(f => (f.name, f.dataType)) ===
+        schema.map(f => (f.name, f.dataType)), t)
+    }
   }
 
   test("snapshotDiff classifies added/removed/changed between versions") {

@@ -147,6 +147,16 @@ class TemplateSubmittersSpec extends SparkSpec {
     assert(RosterSink.appendWithCheck(d2, dir) === 3L)
   }
 
+  test("append sink runs its delta once: the count rides the append write") {
+    val dir = Files.createTempDirectory("graft_state_once").toFile.getAbsolutePath + "/keep_na"
+    val acc = spark.sparkContext.longAccumulator("append_rows")
+    val seen = udf { (_: Long) => acc.add(1L); true }.asNondeterministic()
+    val delta = spark.range(0, 30, 1, 3).filter(seen(col("id")))
+      .select(col("id").cast("string").as("id"))
+    assert(RosterSink.appendWithCheck(delta, dir) === 30L)
+    assert(acc.value === 30L)
+  }
+
   test("append sink: unreadable state surfaces instead of passing as empty") {
     // an empty directory is NOT a missing state table — schema inference
     // fails on it, and the narrowed catch must let that surface rather
